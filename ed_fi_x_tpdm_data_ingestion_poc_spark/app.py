@@ -232,12 +232,18 @@ def load_descriptor_vocabularies(
     """Descriptor vocabularies over the paginated REST source (ref R10+R16,
     initializeMaps' 7 load*DescriptorsMap calls) — reading ALL pages, not
     the first 100 (the reference truncates silently,
-    SisConnectorService.java:493). Returns name -> (codeValue, namespace)
-    DataFrame, persisted: vocabularies are broadcast-sized dims reused by
-    every enrichment join in the run."""
+    SisConnectorService.java:493).
+
+    All names are read by ONE executor job (`read_rest_paths`): every page
+    of every `/<name>Descriptors` endpoint is fetched by one mapInPandas
+    with at most one task per executor slot, into one
+    (vocabulary, codeValue, namespace) frame that is persisted and counted
+    once; `vocabulary` holds the endpoint path. Returns name ->
+    (codeValue, namespace) view of that frame: vocabularies are
+    broadcast-sized dims reused by every enrichment join in the run."""
     from pyspark.sql.types import StringType, StructField, StructType
 
-    from .sources.rest import RestSource, read_rest
+    from .sources.rest import RestSource, read_rest_paths
 
     schema = StructType(
         [
@@ -245,15 +251,13 @@ def load_descriptor_vocabularies(
             StructField("namespace", StringType()),
         ]
     )
-    out: dict[str, DataFrame] = {}
-    for name in names:
-        src = RestSource(
-            base_url=base_url,
-            path=f"/{name}Descriptors",
-            auth=auth,
-            page_size=page_size,
-        )
-        df = read_rest(spark, src, schema).persist()
-        df.count()  # materialize while building the run graph
-        out[name] = df
-    return out
+    paths = {name: f"/{name}Descriptors" for name in names}
+    src = RestSource(base_url=base_url, path="", auth=auth, page_size=page_size)
+    every = read_rest_paths(
+        spark, src, list(paths.values()), schema, path_col="vocabulary"
+    ).persist()
+    every.count()  # materialize while building the run graph
+    return {
+        name: every.filter(F.col("vocabulary") == path).select("codeValue", "namespace")
+        for name, path in paths.items()
+    }

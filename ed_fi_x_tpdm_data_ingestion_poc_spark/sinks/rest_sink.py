@@ -10,8 +10,11 @@ Reference semantics re-expressed (SURVEY.md R18/R19/R21/R26):
     SisConnectorResponse.java:96-138).
 
 Spark-first: documents post from executor partitions in parallel
-(mapInPandas producing an outcome row per document), so at scale N
-executors push concurrently instead of the reference's single thread.
+(mapInPandas producing an outcome row per document) instead of the
+reference's single thread, in one lane per executor slot: the input is
+coalesced, without a shuffle, to `defaultParallelism` partitions, so every
+slot runs one send loop with one token and no slot pays a second Python
+task's fixed cost.
 Upserts are idempotent on the natural key (the ODS upserts on natural key),
 making at-least-once delivery safe.
 
@@ -106,6 +109,52 @@ def _auth_tuple(sink: RestSink) -> tuple | None:
     )
 
 
+def _send(
+    frame: DataFrame,
+    sink: RestSink,
+    op: str,
+    method: str,
+    key_col: str,
+    *,
+    by_id: bool,
+    body_col: str | None = None,
+    etag_col: str | None = None,
+) -> DataFrame:
+    """The one send loop: a `method` request per row of `frame` (to
+    `<path>/<key>` when `by_id`, with `body_col` as body and `etag_col` as
+    If-Match), one outcome row each, one lane per executor slot."""
+    base = f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
+    make_sender = _sender(_auth_tuple(sink), sink.timeout_sec)
+
+    def send_partition(batches):
+        import pandas as pd
+
+        send = make_sender()
+        for pdf in batches:
+            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
+            none = [None] * len(pdf)
+            bodies = pdf[body_col] if body_col else none
+            etags = pdf[etag_col] if etag_col else none
+            for key, body, etag in zip(pdf[key_col], bodies, etags):
+                status, resp = send(
+                    f"{base}/{key}" if by_id else base,
+                    method,
+                    str(body).encode() if body_col else None,
+                    {"If-Match": str(etag)} if etag is not None else None,
+                )
+                ok = 200 <= status < 300
+                out["key"].append(str(key))
+                out["op"].append(op)
+                out["status"].append(status)
+                out["ok"].append(ok)
+                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
+            yield pd.DataFrame(out)
+
+    cols = [c for c in (key_col, body_col, etag_col) if c]
+    lanes = frame.sparkSession.sparkContext.defaultParallelism
+    return frame.select(*cols).coalesce(lanes).mapInPandas(send_partition, OUTCOME_SCHEMA)
+
+
 def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str) -> DataFrame:
     """POST every document; returns an outcome DataFrame
     (key, op='upsert', status, ok, error) for the run report.
@@ -113,52 +162,12 @@ def rest_upsert(docs: DataFrame, sink: RestSink, *, key_col: str, json_col: str)
     docs must carry the natural key and the serialized JSON body
     (build with F.to_json(F.struct(...)) — ref R23).
     """
-    url = f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
-    make_sender = _sender(_auth_tuple(sink), sink.timeout_sec)
-    kc, jc = key_col, json_col
-
-    def post_partition(batches):
-        import pandas as pd
-
-        send = make_sender()
-        for pdf in batches:
-            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
-            for key, body in zip(pdf[kc], pdf[jc]):
-                status, resp = send(url, "POST", str(body).encode())
-                ok = 200 <= status < 300
-                out["key"].append(str(key))
-                out["op"].append("upsert")
-                out["status"].append(status)
-                out["ok"].append(ok)
-                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
-            yield pd.DataFrame(out)
-
-    return docs.select(key_col, json_col).mapInPandas(post_partition, OUTCOME_SCHEMA)
+    return _send(docs, sink, "upsert", "POST", key_col, by_id=False, body_col=json_col)
 
 
 def rest_delete(ids: DataFrame, sink: RestSink, *, id_col: str) -> DataFrame:
     """DELETE by resource id; outcome rows as in rest_upsert (ref R19)."""
-    base = f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
-    make_sender = _sender(_auth_tuple(sink), sink.timeout_sec)
-    ic = id_col
-
-    def delete_partition(batches):
-        import pandas as pd
-
-        send = make_sender()
-        for pdf in batches:
-            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
-            for rid in pdf[ic]:
-                status, resp = send(f"{base}/{rid}", "DELETE", None)
-                ok = 200 <= status < 300
-                out["key"].append(str(rid))
-                out["op"].append("delete")
-                out["status"].append(status)
-                out["ok"].append(ok)
-                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
-            yield pd.DataFrame(out)
-
-    return ids.select(id_col).mapInPandas(delete_partition, OUTCOME_SCHEMA)
+    return _send(ids, sink, "delete", "DELETE", id_col, by_id=True)
 
 
 def rest_update(
@@ -174,32 +183,9 @@ def rest_update(
     carries If-Match — a remote 412 (precondition failed) means the
     document changed since it was read, and is RECORDED like any other
     per-document failure."""
-    base = f"{sink.base_url.rstrip('/')}/{sink.path.lstrip('/')}"
-    make_sender = _sender(_auth_tuple(sink), sink.timeout_sec)
-    ic, jc, ec = id_col, json_col, etag_col
-
-    def put_partition(batches):
-        import pandas as pd
-
-        send = make_sender()
-        for pdf in batches:
-            out = {k: [] for k in ("key", "op", "status", "ok", "error")}
-            etags = pdf[ec] if ec else [None] * len(pdf)
-            for rid, body, etag in zip(pdf[ic], pdf[jc], etags):
-                headers = {"If-Match": str(etag)} if etag is not None else None
-                status, resp = send(
-                    f"{base}/{rid}", "PUT", str(body).encode(), headers
-                )
-                ok = 200 <= status < 300
-                out["key"].append(str(rid))
-                out["op"].append("update")
-                out["status"].append(status)
-                out["ok"].append(ok)
-                out["error"].append(None if ok else resp[:500].decode(errors="replace"))
-            yield pd.DataFrame(out)
-
-    cols = [id_col, json_col] + ([etag_col] if etag_col else [])
-    return docs.select(*cols).mapInPandas(put_partition, OUTCOME_SCHEMA)
+    return _send(
+        docs, sink, "update", "PUT", id_col, by_id=True, body_col=json_col, etag_col=etag_col
+    )
 
 
 def serialize_json(value) -> str:

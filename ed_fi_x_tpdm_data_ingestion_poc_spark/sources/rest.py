@@ -9,9 +9,12 @@ Replaces the reference's REST reads (ref R16/R22):
     (service/SisConnectorService.java:493, 694).
 
 Engine fixes + scale design:
-  * pagination loops until a short page — no truncation;
+  * every page is read — no truncation, also when the server caps `limit`
+    below the requested page size (offsets step by what it honoured);
   * when the endpoint reports a total count, pages are planned up front and
-    fetched IN EXECUTORS via mapInPandas (driver never holds the dataset);
+    fetched IN EXECUTORS via mapInPandas, one task per executor slot at
+    most (driver never holds the dataset); several endpoints of one API
+    are read by one such job (`read_rest_paths`);
   * 401 -> one token refresh + retry, per call (the reference's retry
     pattern, SisConnectorService.java:494-501), token re-fetchable inside
     executors from broadcast client credentials.
@@ -27,11 +30,11 @@ import urllib.error
 import urllib.parse
 import urllib.request
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 @dataclass
@@ -90,30 +93,53 @@ def _page_url(src: RestSource, offset: int, limit: int, total_count: bool = Fals
     return f"{src.base_url.rstrip('/')}/{src.path.lstrip('/')}?" + urllib.parse.urlencode(params)
 
 
-def fetch_page(src: RestSource, offset: int, token: str | None) -> list[dict]:
-    """One page with the reference's 401-refresh-retry pattern."""
-    url = _page_url(src, offset, src.page_size)
-    status, body, _ = _get(url, token, src.timeout_sec)
+def _fetch(
+    src: RestSource, offset: int, token: str | None, *, total_count: bool = False
+) -> tuple[list[dict], dict, str | None]:
+    """One page with the reference's 401-refresh-retry pattern; returns
+    (rows, response headers, the token that succeeded)."""
+    url = _page_url(src, offset, src.page_size, total_count)
+    status, body, headers = _get(url, token, src.timeout_sec)
     if status == 401 and src.auth is not None:
         token = fetch_token(src.auth, src.timeout_sec)
-        status, body, _ = _get(url, token, src.timeout_sec)
+        status, body, headers = _get(url, token, src.timeout_sec)
     if status != 200:
         raise OSError(f"REST GET {url} failed: HTTP {status}: {body[:200]!r}")
-    return json.loads(body)
+    return json.loads(body), headers, token
 
 
 def iter_all_rows(src: RestSource, token: str | None = None) -> Iterator[dict]:
-    """Loop offset += page_size until a short page (fixes the reference's
-    first-page-only truncation)."""
+    """Every row, page by page (fixes the reference's first-page-only
+    truncation). The offset advances by the rows the server actually sent,
+    so a server that caps `limit` below `page_size` loses nothing; the walk
+    ends at an empty page or at a page shorter than the largest one seen."""
     if token is None and src.auth is not None:
         token = fetch_token(src.auth, src.timeout_sec)
-    offset = 0
+    offset = step = 0
     while True:
-        page = fetch_page(src, offset, token)
+        page, _, token = _fetch(src, offset, token)
         yield from page
-        if len(page) < src.page_size:
+        if not page or len(page) < step:
             return
-        offset += src.page_size
+        step = max(step, len(page))
+        offset += len(page)
+
+
+def _plan_offsets(
+    src: RestSource, token: str | None, total_count_header: str
+) -> tuple[list[int] | None, str | None]:
+    """Page offsets of `src` from one probe for a full first page with its
+    total count; None when the endpoint reports no count. Offsets step by
+    the page size the server honoured, which may be below `page_size`."""
+    first, headers, token = _fetch(src, 0, token, total_count=True)
+    total = next(
+        (int(v) for k, v in headers.items() if k.lower() == total_count_header.lower()),
+        None,
+    )
+    if total is None:
+        return None, token
+    step = len(first) if 0 < len(first) < src.page_size else src.page_size
+    return list(range(0, total, step)), token
 
 
 def get_by_id(
@@ -149,42 +175,82 @@ def read_rest(
     *,
     total_count_header: str = "Total-Count",
 ) -> DataFrame:
-    """Paginated REST endpoint as a DataFrame.
+    """Paginated REST endpoint as a DataFrame: `read_rest_paths` over the
+    one path `src.path` — a driver probe for the count and the page size
+    the server honours, then executors fetch every page, one task per
+    executor slot at most."""
+    return read_rest_paths(
+        spark, src, [src.path], schema, total_count_header=total_count_header
+    )
 
-    Scale path: HEAD-style count probe (offset=0, limit=1, totalCount=true)
-    -> plan page offsets -> executors fetch pages in parallel and parse JSON
-    into `schema` (distributed; the driver holds only the offset list).
-    Fallback when the endpoint doesn't report a count: sequential driver
-    pagination (still complete, just not parallel).
+
+def read_rest_paths(
+    spark: SparkSession,
+    src: RestSource,
+    paths: list[str],
+    schema: StructType,
+    *,
+    path_col: str | None = None,
+    total_count_header: str = "Total-Count",
+) -> DataFrame:
+    """Several paginated endpoints of one API (`src` with each of `paths`)
+    as ONE DataFrame read by one executor job.
+
+    Scale path: the driver probes each path for a full first page and its
+    count (limit=page_size, totalCount=true) and plans every page of every
+    path as (path, offset); one `spark.range` over the page indices, with
+    one slice per executor slot at most (`defaultParallelism`), feeds one
+    mapInPandas that fetches the pages and parses JSON into `schema`. The
+    driver holds only the page list. `path_col`, when given, adds a
+    leading string column holding each row's path. An endpoint that
+    reports no count is paginated sequentially on the driver (still
+    complete, just not parallel).
     """
     token = fetch_token(src.auth, src.timeout_sec) if src.auth else None
-    status, body, headers = _get(
-        _page_url(src, 0, 1, total_count=True), token, src.timeout_sec
+    pages: list[tuple[str, int]] = []
+    driver_rows: list[list] = []
+    for path in paths:
+        one = replace(src, path=path)
+        offsets, token = _plan_offsets(one, token, total_count_header)
+        if offsets is None:
+            driver_rows += [
+                ([path] if path_col else []) + [r.get(f.name) for f in schema.fields]
+                for r in iter_all_rows(one, token)
+            ]
+        else:
+            pages += [(path, off) for off in offsets]
+
+    out_schema = StructType(
+        ([StructField(path_col, StringType())] if path_col else []) + schema.fields
     )
-    total: int | None = None
-    if status == 200:
-        for k, v in headers.items():
-            if k.lower() == total_count_header.lower():
-                total = int(v)
-                break
+    df = _fetch_pages(spark, src, pages, out_schema, token, path_col)
+    if driver_rows:
+        df = df.unionByName(spark.createDataFrame(driver_rows, out_schema))
+    # Columns arrive as python objects; enforce declared types.
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in out_schema.fields])
 
-    if total is None:
-        rows = list(iter_all_rows(src, token))
-        return spark.createDataFrame(rows, schema=schema)  # type: ignore[arg-type]
 
-    # spark.range with step = page_size plans the offsets as a pure-JVM
-    # Range scan, one partition per slice (a createDataFrame(list) plan is
-    # a Python-RDD scan + repartition exchange re-executed per run)
-    n_offsets = len(range(0, max(total, 1), src.page_size))
-    plan = spark.range(
-        0, max(total, 1), src.page_size, min(n_offsets, 64)
-    ).withColumnRenamed("id", "offset")
+def _fetch_pages(
+    spark: SparkSession,
+    src: RestSource,
+    pages: list[tuple[str, int]],
+    schema: StructType,
+    token: str | None,
+    path_col: str | None,
+) -> DataFrame:
+    """The executor fetch: page i of `pages` is (path, offset) under
+    `src.base_url`, fetched with `src`'s page size, auth and parameters."""
+    # spark.range plans the page indices as a pure-JVM Range scan (a
+    # createDataFrame(list) plan is a Python-RDD scan + repartition
+    # exchange re-executed per run)
+    slices = max(1, min(len(pages), spark.sparkContext.defaultParallelism))
+    plan = spark.range(0, len(pages), 1, slices)
 
     # Executor closure must be SELF-CONTAINED: cloudpickle serializes
     # module-level functions/classes by reference, and executor Python
     # workers need not have this package on sys.path. Close over plain data
     # and use only stdlib + pandas inside.
-    endpoint = f"{src.base_url.rstrip('/')}/{src.path.lstrip('/')}"
+    base = src.base_url.rstrip("/")
     extra_params = dict(src.extra_params)
     page_size = src.page_size
     timeout = src.timeout_sec
@@ -193,7 +259,7 @@ def read_rest(
         if src.auth
         else None
     )
-    field_names = [f.name for f in schema.fields]
+    field_names = [f.name for f in schema.fields if f.name != path_col]
     init_token = token
 
     def fetch_partition(batches):
@@ -220,8 +286,8 @@ def read_rest(
             with _ur.urlopen(req, timeout=timeout) as resp:
                 return _json.loads(resp.read())["access_token"]
 
-        def _get_page(offset, tok):
-            url = endpoint + "?" + _up.urlencode(
+        def _get_page(path, offset, tok):
+            url = f"{base}/{path.lstrip('/')}?" + _up.urlencode(
                 {"offset": str(offset), "limit": str(page_size), **extra_params}
             )
             headers = {"Accept": "application/json"}
@@ -235,20 +301,18 @@ def read_rest(
 
         tok = init_token
         for pdf in batches:
-            for off in pdf["offset"]:
-                status, body = _get_page(int(off), tok)
+            for i in pdf["id"]:
+                path, off = pages[int(i)]
+                status, body = _get_page(path, off, tok)
                 if status == 401 and auth_tuple is not None:
                     tok = _fetch_token()
-                    status, body = _get_page(int(off), tok)
+                    status, body = _get_page(path, off, tok)
                 if status != 200:
-                    raise OSError(f"REST page offset={off} failed: HTTP {status}")
+                    raise OSError(f"REST page {path} offset={off} failed: HTTP {status}")
                 page = _json.loads(body)
-                yield pd.DataFrame(
-                    {name: [r.get(name) for r in page] for name in field_names}
-                )
+                cols = {name: [r.get(name) for r in page] for name in field_names}
+                if path_col:
+                    cols = {path_col: [path] * len(page), **cols}
+                yield pd.DataFrame(cols)
 
-    json_df = plan.mapInPandas(fetch_partition, schema=schema)
-    # Columns arrive as python objects; enforce declared types.
-    return json_df.select(
-        *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-    )
+    return plan.mapInPandas(fetch_partition, schema=schema)

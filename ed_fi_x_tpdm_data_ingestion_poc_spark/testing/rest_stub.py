@@ -18,14 +18,16 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 class StubRestServer:
     """Context manager around a ThreadingHTTPServer on an ephemeral port.
 
-    rows: list of dicts served at GET /items.
+    rows: list of dicts served at every GET list path, or a dict of
+      path -> rows (e.g. {"/sexDescriptors": [...]}) to serve one list
+      per path; an unknown path then serves no rows.
     fail_first_with_401: every worker's FIRST request 401s unless it carries
       the refreshed token ("tok-2"), proving the retry path.
     """
 
     def __init__(
         self,
-        rows: list[dict],
+        rows: list[dict] | dict[str, list[dict]],
         *,
         page_size_cap: int = 100,
         require_auth: bool = False,
@@ -169,6 +171,8 @@ class StubRestServer:
                 # a field by string equality (SURVEY.md §2.4 — the surface
                 # the engine's filter pushdown compiles to)
                 rows = stub.rows
+                if isinstance(rows, dict):
+                    rows = rows.get(parsed.path, [])
                 if not stub.ignore_filters:
                     for k, vals in qs.items():
                         if k in ("offset", "limit", "totalCount"):
