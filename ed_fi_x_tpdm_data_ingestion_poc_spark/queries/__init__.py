@@ -13,6 +13,13 @@ Conventions that make cross-engine value-hashing stable:
   * explicit casts where engine result types differ (e.g. DuckDB EXTRACT
     -> BIGINT vs Spark year() -> INT),
   * total ORDER BY wherever a LIMIT exists.
+
+Caching rule: everything a query reuses (table scans, fixtures, artifacts,
+gate decisions) lives in ``session_cache(spark)`` (session.py), one plain
+dict on the SparkSession object, so every entry lives exactly as long as
+its session. Keys start with a string naming the artifact (its memo label
+where it has one); two call sites share that string only when they share
+the artifact. Build through ``memo`` to get the lock and build timing.
 """
 
 from __future__ import annotations
@@ -22,6 +29,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import session_cache
 
 # Build-once fixture/artifact caches are shared across queries; the bench
 # runs the suite CONCURRENTLY (Spark's scheduler amortizes the per-job
@@ -81,13 +90,6 @@ def memo(cache: dict, key, build, label: str | None = None):
                 if _BUILD_STACK:
                     _BUILD_STACK[-1] += contrib
         return cache[key]
-
-
-# gate-probe memo for broadcast_if_small: (session ref kept so id() can't
-# be recycled) — keyed by the side's CANONICALIZED plan, so re-built
-# expressions over the same tables (a fresh .where() per query eval)
-# share one probe count instead of paying a count job per evaluation
-_GATE_COUNTS: dict[tuple, tuple] = {}
 
 
 def _est_row_bytes(dt) -> int:
@@ -158,18 +160,13 @@ def broadcast_if_small(
     conversion when the side turns out small after filters)."""
     from pyspark.sql import functions as _F
 
-    key = (id(df.sparkSession), df.semanticHash())
-    hit = _GATE_COUNTS.get(key)
-    if hit is None or hit[0] is not df.sparkSession:
-        _GATE_COUNTS[key] = (df.sparkSession, df.count())
-    n = _GATE_COUNTS[key][1]
+    cache = session_cache(df.sparkSession)
+    key = ("broadcast_gate", df.semanticHash())
+    if key not in cache:
+        cache[key] = df.count()
+    n = cache[key]
     small = n <= max_rows and n * _est_row_bytes(df.schema) <= max_bytes
     return _F.broadcast(df) if small else df
-
-
-# spread_scan decision memo: (session id, semantic hash) -> bool, with the
-# session object pinned so id() can't be recycled (the _GATE_COUNTS rule)
-_SPREAD_DECISIONS: dict[tuple, tuple] = {}
 
 
 def spread_scan(df: DataFrame, factor: float = 1) -> DataFrame:
@@ -212,24 +209,22 @@ def spread_scan(df: DataFrame, factor: float = 1) -> DataFrame:
     posture unchanged: corpus tables split past defaultParallelism on
     their own, the under-split gate fails, and this returns the frame
     untouched."""
-    key = (id(df.sparkSession), df.semanticHash(), factor)
-    hit = _SPREAD_DECISIONS.get(key)
-    if hit is None or hit[0] is not df.sparkSession:
+    spark = df.sparkSession
+    cache = session_cache(spark)
+    key = ("spread_scan", df.semanticHash(), factor)
+    if key not in cache:
         from ..session import mem_available_gb
 
-        par = max(
-            1,
-            int(df.sparkSession.sparkContext.defaultParallelism * factor),
-        )
-        avail = mem_available_gb()
+        par = max(1, int(spark.sparkContext.defaultParallelism * factor))
+        # one MemAvailable sample per session: sampling per plan would
+        # make the width depend on which query happened to run first
+        if "mem_available_gb" not in cache:
+            cache["mem_available_gb"] = mem_available_gb()
+        avail = cache["mem_available_gb"]
         if avail is not None:
             par = min(par, max(8, int(avail / 1.5)))
-        _SPREAD_DECISIONS[key] = (
-            df.sparkSession,
-            df.rdd.getNumPartitions() < par,
-            par,
-        )
-    _, under_split, par = _SPREAD_DECISIONS[key]
+        cache[key] = (df.rdd.getNumPartitions() < par, par)
+    under_split, par = cache[key]
     return df.repartition(par) if under_split else df
 
 

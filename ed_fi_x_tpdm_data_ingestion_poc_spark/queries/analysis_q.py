@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import session_cache
 from ..tables import table
 from . import query
 
@@ -478,7 +479,6 @@ def q133(spark: SparkSession, sf: str) -> DataFrame:
         summary_rank_bounds,
     )
     from . import memo
-    from .quality_q import _CLIPS
 
     li = table(spark, sf, "lineitem")
 
@@ -568,7 +568,7 @@ def q133(spark: SparkSession, sf: str) -> DataFrame:
             ok_exact &= int(row2[f"lt{i}"]) < target <= int(row2[f"le{i}"])
         return bool(ok_n and ok_bounds and ok_merge and ok_exact)
 
-    ok = memo(_CLIPS, ("quantile_laws", sf), _laws, label="quantile_laws")
+    ok = memo(session_cache(spark), ("quantile_laws", sf), _laws, label="quantile_laws")
     from . import ok_flag
 
     return ok_flag(spark, ok)
@@ -613,11 +613,10 @@ def q138(spark: SparkSession, sf: str) -> DataFrame:
     the approximation provably does not leak into the answer."""
     from ..operators.quantiles import exact_quantiles_via_summary
     from . import memo
-    from .quality_q import _CLIPS
 
     e = table(spark, sf, "events")
     thr = memo(
-        _CLIPS,
+        session_cache(spark),
         ("p90_value", sf),
         lambda: exact_quantiles_via_summary(e, "value", [_TOP_PHI], eps=0.01)[
             _TOP_PHI
@@ -672,14 +671,13 @@ def q137(spark: SparkSession, sf: str) -> DataFrame:
     form (o_totalprice pushes to the orders scan either way)."""
     from ..operators.sketches import bloom_might_contain, build_bloom
     from . import memo
-    from .quality_q import _CLIPS
 
     li = table(spark, sf, "lineitem")
     o = table(spark, sf, "orders").where(
         F.col("o_totalprice") > _BLOOM_PRICE
     )
     bloom = memo(
-        _CLIPS,
+        session_cache(spark),
         ("bloom_orders", sf),
         lambda: build_bloom(o, "o_orderkey", fpp=0.05, k_cap=2),
         label="bloom_orders",
@@ -861,9 +859,8 @@ def q142(spark: SparkSession, sf: str) -> DataFrame:
 
     deg = _artifact(spark, sf, "pr_deg", build_deg)
     from . import memo
-    from .quality_q import _CLIPS
 
-    n = memo(_CLIPS, ("pr_n", sf), deg.count, label="pr_n")
+    n = memo(session_cache(spark), ("pr_n", sf), deg.count, label="pr_n")
     # rank/degree tables are NODE-sized (n rows, known exactly): while
     # they fit, broadcast them so the edge list never shuffles for the
     # join — only the map-side-combined contribution partials move. At
@@ -1072,7 +1069,6 @@ def q144(spark: SparkSession, sf: str) -> DataFrame:
     ROUND(6) absorbs nothing but summation noise."""
     from ..operators.scoring import bigram_counts
     from . import memo
-    from .quality_q import _CLIPS
 
     d = table(spark, sf, "documents")
     c = bigram_counts(d).where(F.col("c12") >= _PMI_MIN_C12)
@@ -1094,7 +1090,7 @@ def q144(spark: SparkSession, sf: str) -> DataFrame:
         ).first()
         return int(row.nu), int(row.nb)
 
-    nu, nb = memo(_CLIPS, ("pmi_totals", sf), _totals, label="pmi_totals")
+    nu, nb = memo(session_cache(spark), ("pmi_totals", sf), _totals, label="pmi_totals")
     u1 = uc.select(F.col("w").alias("w1"), F.col("cu").alias("cu1"))
     u2 = uc.select(F.col("w").alias("w2"), F.col("cu").alias("cu2"))
     pmi = F.round(
@@ -1233,7 +1229,6 @@ def q146(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.quantiles import exact_quantiles_via_summary
     from ..operators.scoring import hashed_linear_score
     from . import memo
-    from .quality_q import _CLIPS
     from .scoring_q import _BIAS, _W
 
     d = table(spark, sf, "documents")
@@ -1255,7 +1250,10 @@ def q146(spark: SparkSession, sf: str) -> DataFrame:
         finally:
             sc.unpersist()
 
-    thr = memo(_CLIPS, ("score_deciles", sf), _thresholds, label="score_deciles")
+    thr = memo(
+        session_cache(spark), ("score_deciles", sf), _thresholds,
+        label="score_deciles",
+    )
     bucket = sum(
         (F.col("score") >= F.lit(thr[phi])).cast("int") for phi in phis
     )
@@ -2275,13 +2273,12 @@ def q203(spark: SparkSession, sf: str) -> DataFrame:
     # the warm query is the single co-occur join pipeline
     from . import built, memo
     from .llm import _artifact
-    from .quality_q import _CLIPS
 
     st = _artifact(
         spark, sf, "session_types", lambda: built(s.distinct().persist())
     )
     n_sessions = memo(
-        _CLIPS,
+        session_cache(spark),
         ("n_sessions", sf),
         lambda: st.select("user_id", "sid").distinct().count(),
         label="n_sessions",

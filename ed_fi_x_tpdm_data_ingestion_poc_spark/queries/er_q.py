@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import session_cache
 from ..tables import table
 from . import built, memo, query
 
@@ -299,9 +300,6 @@ def q152(spark: SparkSession, sf: str) -> DataFrame:
 # q159 — source vocabulary overlap matrix (exact pairwise Jaccard)
 # ---------------------------------------------------------------------------
 
-_VOCAB: dict[tuple, DataFrame] = {}
-
-
 @query(
     "qz159_vocab_overlap",
     oracle="""
@@ -347,7 +345,7 @@ def q159(spark: SparkSession, sf: str) -> DataFrame:
     # materialize-once: three consumers (both join sides + sizes) would
     # otherwise each re-scan the corpus; the persisted table is
     # vocab x sources rows, corpus-size independent
-    v = memo(_VOCAB, (id(spark), sf), _vocab, label="source_vocab")
+    v = memo(session_cache(spark), ("source_vocab", sf), _vocab, label="source_vocab")
     sz = v.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a = v.select(F.col("source").alias("src_a"), "tok")
     b = v.select(F.col("source").alias("src_b"), "tok")

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import session_cache
 from . import memo, query
 
 # --------------------------------------------------------------- fixtures --
@@ -48,28 +49,18 @@ _REMOTE = [("101", "res-101"), ("102", "res-102"), ("900", "res-900"), ("901", "
 # a bare createDataFrame(list) plans as a Python-RDD scan
 # (applySchemaToPythonRDD) that round-trips a Python worker on EVERY
 # downstream execution; caching pins the rows JVM-side once.
-_FIX_DFS: dict[tuple, DataFrame] = {}
-
-
 def _fixture_df(spark: SparkSession, name: str, data, schema: str) -> DataFrame:
     def build():
         df = spark.createDataFrame(data, schema).persist()
         df.count()  # materialize: downstream scans hit the JVM cache
         return df
 
-    return memo(_FIX_DFS, (id(spark), name), build, label="fixture_dfs")
+    return memo(session_cache(spark), ("fixture_dfs", name), build, label="fixture_dfs")
 
 
-# One Derby "remote RDBMS" per (session, sf): the database is the fixture;
-# the declared operator is the partitioned JDBC scan against it.
-_DERBY_FIXTURE: dict[tuple, tuple[str, int, int]] = {}
-
-# One REST stub server per process: the server is the fixture ("the remote
+# One REST stub server per session: the server is the fixture ("the remote
 # ODS API"); the declared operator is the paginated executor-side read.
-_STUB_CACHE: dict = {}
-
-
-def _stub_server():
+def _stub_server(spark: SparkSession):
     def build():
         from ..testing.rest_stub import StubRestServer
 
@@ -81,7 +72,7 @@ def _stub_server():
         atexit.register(lambda: server.__exit__())
         return server
 
-    return memo(_STUB_CACHE, "server", build, label="rest_stub")
+    return memo(session_cache(spark), "rest_stub", build, label="rest_stub")
 
 
 def _values(rows: list[tuple]) -> str:
@@ -283,8 +274,11 @@ def q02(spark: SparkSession, sf: str) -> DataFrame:
         lo, hi = src_rows.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
         return (db_url, int(lo), int(hi))
 
+    # one Derby "remote RDBMS" per (session, sf): the database is the
+    # fixture; the declared operator is the partitioned JDBC scan against it
     url, lo, hi = memo(
-        _DERBY_FIXTURE, (id(spark), sf), build_fixture, label="derby_fixture"
+        session_cache(spark), ("derby_fixture", sf), build_fixture,
+        label="derby_fixture",
     )
 
     jdbc = JdbcSource(url=url, driver="org.apache.derby.jdbc.EmbeddedDriver")
@@ -320,7 +314,7 @@ def q03(spark: SparkSession, sf: str) -> DataFrame:
 
     from ..sources.rest import RestSource, read_rest
 
-    server = _stub_server()
+    server = _stub_server(spark)
     src = RestSource(base_url=server.url, path="/items", page_size=100)
     schema = StructType(
         [StructField("id", LongType()), StructField("name", StringType())]
@@ -394,7 +388,7 @@ def q98(spark: SparkSession, sf: str) -> DataFrame:
     executors, same plan as q03's read_rest."""
     from ..sources.rest_datasource import register_rest_datasource
 
-    server = _stub_server()
+    server = _stub_server(spark)
     register_rest_datasource(spark)
     df = (
         spark.read.format("edfi_rest")
@@ -426,7 +420,7 @@ def q98b(spark: SparkSession, sf: str) -> DataFrame:
     test_limit_offset_options_fetch_only_needed_pages)."""
     from ..sources.rest_datasource import register_rest_datasource
 
-    server = _stub_server()
+    server = _stub_server(spark)
     register_rest_datasource(spark)
     return (
         spark.read.format("edfi_rest")
@@ -461,7 +455,7 @@ def q99(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.rest_datasource import register_rest_datasource
     from ..streaming.replay import run_to_memory
 
-    server = _stub_server()
+    server = _stub_server(spark)
     register_rest_datasource(spark)
     stream = (
         spark.readStream.format("edfi_rest")
@@ -472,9 +466,6 @@ def q99(spark: SparkSession, sf: str) -> DataFrame:
         .load()
     )
     return run_to_memory(stream, output_mode="append")
-
-
-_JDBC_SINK_FIXTURE: dict[tuple, tuple[str, int, int]] = {}
 
 
 @query(
@@ -544,7 +535,7 @@ def q298(spark: SparkSession, sf: str) -> DataFrame:
         return (db_url, int(lo), int(hi))
 
     url, lo, hi = memo(
-        _JDBC_SINK_FIXTURE, (id(spark), sf), build_fixture,
+        session_cache(spark), ("jdbc_sink_fixture", sf), build_fixture,
         label="jdbc_sink_fixture",
     )
     sink = JdbcSource(url=url, driver="org.apache.derby.jdbc.EmbeddedDriver")

@@ -13,8 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import session_cache
 from ..tables import table
-from . import query
+from . import memo, query
 
 
 @query(
@@ -197,11 +198,6 @@ _FIXTURE_DESCRIPTORS = [
 ]
 
 
-# fixture DataFrames per session: createDataFrame is a py4j round-trip per
-# call; the literals never change
-_FIXTURE_DFS: dict[int, tuple] = {}
-
-
 def _codes_values_sql() -> str:
     return ", ".join(f"('{c}')" for c in _FIXTURE_CODES)
 
@@ -229,8 +225,7 @@ def q40(spark: SparkSession, sf: str) -> DataFrame:
     """
     from ..operators.enrich import enrich_descriptor_uri
 
-    key = id(spark)
-    if key not in _FIXTURE_DFS:
+    def build():
         codes = spark.createDataFrame(
             [(c,) for c in _FIXTURE_CODES], "code string"
         ).persist()
@@ -241,8 +236,9 @@ def q40(spark: SparkSession, sf: str) -> DataFrame:
         # scan (applySchemaToPythonRDD) on every execution; the cache pins
         # the rows JVM-side once
         codes.count(), descriptors.count()
-        _FIXTURE_DFS[key] = (codes, descriptors)
-    codes, descriptors = _FIXTURE_DFS[key]
+        return codes, descriptors
+
+    codes, descriptors = memo(session_cache(spark), "q40_fixture_dfs", build)
     out = enrich_descriptor_uri(
         codes, descriptors, code_col="code", out_col="uri"
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import session_cache
 from ..tables import table
 from . import query
 
@@ -2093,7 +2094,6 @@ def q177(spark: SparkSession, sf: str) -> DataFrame:
     sources x 10 table with the reference row broadcast."""
     from ..operators.quantiles import exact_quantiles_via_summary
     from . import memo
-    from .quality_q import _CLIPS
 
     d = table(spark, sf, "documents")
 
@@ -2106,7 +2106,7 @@ def q177(spark: SparkSession, sf: str) -> DataFrame:
             rank_den=10,
         )
 
-    thr = memo(_CLIPS, ("psi_edges", sf), _edges, label="psi_edges")
+    thr = memo(session_cache(spark), ("psi_edges", sf), _edges, label="psi_edges")
     bucket = sum(
         (F.col("n_chars") >= F.lit(thr[phi])).cast("int")
         for phi in _PSI_PHIS
@@ -2968,9 +2968,6 @@ def q188(spark: SparkSession, sf: str) -> DataFrame:
 # q189 — split-conformal prediction bound per event type
 # ---------------------------------------------------------------------------
 
-_CONF: dict[tuple, DataFrame] = {}
-
-
 @query(
     "qz189_conformal_bound",
     oracle="""
@@ -3060,7 +3057,10 @@ def q189(spark: SparkSession, sf: str) -> DataFrame:
             rows, "event_type string, n long, med double, qhat double"
         )
 
-    out = memo(_CONF, (id(spark), sf), _build, label="conformal_bounds")
+    out = memo(
+        session_cache(spark), ("conformal_bounds", sf), _build,
+        label="conformal_bounds",
+    )
     return out.select(
         "event_type",
         F.col("n").cast("bigint").alias("n"),

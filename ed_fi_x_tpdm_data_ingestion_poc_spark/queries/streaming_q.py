@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import session_cache
 from . import ok_flag, query
 
 
@@ -704,7 +705,6 @@ def q84(spark: SparkSession, sf: str) -> DataFrame:
 # q162 — streaming per-group quantile summaries (mergeable MRL on a stream)
 # ---------------------------------------------------------------------------
 
-_SQ: dict[tuple, bool] = {}
 _SQ_EPS = 0.05
 
 
@@ -841,7 +841,10 @@ def q162(spark: SparkSession, sf: str) -> DataFrame:
                 ok &= lo <= true_rank <= hi
         return bool(ok)
 
-    ok = memo(_SQ, ("sq", id(spark), sf), _laws, label="stream_quantile_laws")
+    ok = memo(
+        session_cache(spark), ("stream_quantile_laws", sf), _laws,
+        label="stream_quantile_laws",
+    )
     return ok_flag(spark, ok)
 
 
@@ -986,9 +989,6 @@ def q179(spark: SparkSession, sf: str) -> DataFrame:
 # q182 — streaming PSI drift monitor (q162's stream state x q177's PSI)
 # ---------------------------------------------------------------------------
 
-_PSI_MON: dict[tuple, DataFrame] = {}
-
-
 @query(
     "qz182_stream_psi_monitor",
     oracle="""
@@ -1125,7 +1125,6 @@ def _psi_recoverable_monitor(spark: SparkSession, sf: str) -> DataFrame:
     from ..streaming.replay import run_to_memory
     from ..tables import table
     from . import memo
-    from .quality_q import _CLIPS
     from .stats_q import _PSI_PHIS
 
     e_batch = table(spark, sf, "events")
@@ -1139,7 +1138,7 @@ def _psi_recoverable_monitor(spark: SparkSession, sf: str) -> DataFrame:
             rank_den=10,
         )
 
-    thr = memo(_CLIPS, ("psi_ev_edges", sf), _edges, label="psi_ev_edges")
+    thr = memo(session_cache(spark), ("psi_ev_edges", sf), _edges, label="psi_ev_edges")
 
     def _monitor() -> DataFrame:
         bucket = sum(
@@ -1188,7 +1187,8 @@ def _psi_recoverable_monitor(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     return memo(
-        _PSI_MON, (id(spark), sf, "rec"), _monitor, label="psi_stream_rec"
+        session_cache(spark), ("psi_stream_rec", sf), _monitor,
+        label="psi_stream_rec",
     )
 
 
@@ -1196,7 +1196,6 @@ def _psi_recoverable_monitor(spark: SparkSession, sf: str) -> DataFrame:
 # q192 — streaming sketch-KS drift monitor (q162's stream state x q170's law)
 # ---------------------------------------------------------------------------
 
-_SKM: dict[tuple, DataFrame] = {}
 _SKM_EPS = 0.05
 _SKM_MON = "purchase"  # monitored feed
 _SKM_REF = "view"      # reference feed
@@ -1500,14 +1499,15 @@ def q192(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(1 if ok else 0).cast("int").alias("ok"),
         )
 
-    return memo(_SKM, (id(spark), sf), _build, label="sketch_ks_stream")
+    return memo(
+        session_cache(spark), ("sketch_ks_stream", sf), _build,
+        label="sketch_ks_stream",
+    )
 
 
 # ---------------------------------------------------------------------------
 # q206 — streaming last-touch attribution (qz193's live form)
 # ---------------------------------------------------------------------------
-
-_SLT: dict[tuple, DataFrame] = {}
 
 # the per-user last-touch state contract: shared by q206 and
 # tests/test_monitor_recovery.py (the q192/q161 rationale — a
@@ -1606,7 +1606,10 @@ def q206(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy(F.col("n").desc(), "touch")
         )
 
-    out = memo(_SLT, (id(spark), sf), _build, label="last_touch_stream")
+    out = memo(
+        session_cache(spark), ("last_touch_stream", sf), _build,
+        label="last_touch_stream",
+    )
     return out
 
 
@@ -1615,8 +1618,6 @@ def q206(spark: SparkSession, sf: str) -> DataFrame:
 # updater family: PSI contingency vectors, MRL summaries, and now raw
 # numeric moments)
 # ---------------------------------------------------------------------------
-
-_MOM_MON: dict[tuple, DataFrame] = {}
 
 # the per-key moments-state contract: shared by q278 and
 # tests/test_monitor_recovery.py (the PSI/MRL DDL rationale — a state
@@ -1772,7 +1773,8 @@ def q278(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     return memo(
-        _MOM_MON, (id(spark), sf), _monitor, label="moments_stream"
+        session_cache(spark), ("moments_stream", sf), _monitor,
+        label="moments_stream",
     )
 
 

@@ -131,12 +131,15 @@ def _default_driver_memory(par: int) -> str:
     return f"{int(max(8, min(20, heap)))}g"
 
 
-# id -> session: holding the reference keeps id() from being reused by a
-# later session object after GC (which would wrongly skip tuning it)
-_TUNED: dict[int, SparkSession] = {}
+def session_cache(spark: SparkSession) -> dict:
+    """The engine's one cache: a plain dict stored on the session object.
 
-# SparkContext id -> context (same id-pinning rationale as _TUNED)
-_SHIPPED: dict[int, object] = {}
+    Every materialized intermediate the engine reuses (table scans,
+    fixtures, artifacts, gate decisions) lives here, so its lifetime is
+    the session's and a new session starts cold. Keys begin with a string
+    naming the artifact. `setdefault` on the instance dict is atomic
+    under the GIL, so concurrent first calls agree on one dict."""
+    return vars(spark).setdefault("_engine_cache", {})
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -153,7 +156,7 @@ def ship_package(spark: SparkSession) -> None:
     cluster, where executor hosts share nothing with the driver's
     filesystem. ~100 KB, once per context."""
     sc = spark.sparkContext
-    if id(sc) in _SHIPPED:
+    if getattr(sc, "_engine_shipped", False):
         return
     import tempfile
     import zipfile
@@ -172,7 +175,7 @@ def ship_package(spark: SparkSession) -> None:
                 rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                 zf.write(full, rel)
     sc.addPyFile(zip_path)
-    _SHIPPED[id(sc)] = sc
+    sc._engine_shipped = True
 
 
 def tune(spark: SparkSession, cfg: EngineConfig | None = None) -> SparkSession:
@@ -183,7 +186,8 @@ def tune(spark: SparkSession, cfg: EngineConfig | None = None) -> SparkSession:
     Idempotent per session: every conf set is a py4j round-trip, and table()
     calls this on each load.
     """
-    if cfg is None and id(spark) in _TUNED:
+    cache = session_cache(spark)
+    if cfg is None and "tuned" in cache:
         return spark
     cfg = cfg or EngineConfig()
     conf = {
@@ -215,7 +219,7 @@ def tune(spark: SparkSession, cfg: EngineConfig | None = None) -> SparkSession:
         except Exception:
             pass  # non-runtime conf on a live session: keep going
     ship_package(spark)
-    _TUNED[id(spark)] = spark
+    cache["tuned"] = True
     return spark
 
 

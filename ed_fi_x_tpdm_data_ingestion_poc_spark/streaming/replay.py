@@ -21,13 +21,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import session_cache
+
 EVENTS_DDL = (
     "event_id long, ts timestamp, user_id long, event_type string,"
     " value double, props string"
 )
-
-# replay dirs are immutable once written: cache per (sf_dir, layout) per process
-_replay_cache: dict[tuple[str, str], str] = {}
 
 
 def write_replay_dir(chunks: list, layout_key: str | None = None) -> str:
@@ -85,9 +84,11 @@ def events_replay_dir(spark: SparkSession, sf_dir: str, *, layout: str = "single
                tiebreak order (the per-key monotonic-feed contract the
                incremental SCD2 apply requires).
     """
-    key = (sf_dir, layout)
-    if key in _replay_cache:
-        return _replay_cache[key]
+    # replay dirs are immutable once written: one per (sf_dir, layout)
+    cache = session_cache(spark)
+    key = ("events_replay", sf_dir, layout)
+    if key in cache:
+        return cache[key]
 
     from ..tables import table
 
@@ -125,8 +126,8 @@ def events_replay_dir(spark: SparkSession, sf_dir: str, *, layout: str = "single
         ]
     else:
         raise ValueError(f"unknown layout {layout!r}")
-    _replay_cache[key] = write_replay_dir(chunks)
-    return _replay_cache[key]
+    cache[key] = write_replay_dir(chunks)
+    return cache[key]
 
 
 DOCS_SIZED_DDL = "doc_id long, tok long"
@@ -138,9 +139,10 @@ def documents_sized_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     every downstream per-shard consumer (shard = doc_id % n) sees its ids
     monotonically increasing ACROSS micro-batches — the arrival contract
     a streaming packer needs to reproduce the batch next-fit assignment."""
-    key = (sf_dir, "docs_sized_thirds")
-    if key in _replay_cache:
-        return _replay_cache[key]
+    cache = session_cache(spark)
+    key = ("docs_sized_replay", sf_dir)
+    if key in cache:
+        return cache[key]
 
     from ..operators.text import token_count
     from ..tables import table
@@ -153,8 +155,8 @@ def documents_sized_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     )
     n = len(pdf)
     chunks = [pdf.iloc[: n // 3], pdf.iloc[n // 3 : 2 * n // 3], pdf.iloc[2 * n // 3 :]]
-    _replay_cache[key] = write_replay_dir(chunks)
-    return _replay_cache[key]
+    cache[key] = write_replay_dir(chunks)
+    return cache[key]
 
 
 def read_replay_stream(

@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .session import tune
+from .session import session_cache, tune
 
 TABLE_NAMES = (
     "region",
@@ -30,11 +30,6 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# values hold the session reference too, so id(spark) can't be recycled by
-# a later session object while its cache entries are alive
-_TABLE_CACHE: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
-
-
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table. Lazy — the scan plan carries pushed filters.
 
@@ -49,12 +44,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune(spark)
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    key = (id(spark), sf_dir, name)
-    if key not in _TABLE_CACHE:
+    cache = session_cache(spark)
+    key = ("table", sf_dir, name)
+    if key not in cache:
         path = os.path.join(sf_dir, f"{name}.parquet")
-        df = _read_events(spark, path) if name == "events" else spark.read.parquet(path)
-        _TABLE_CACHE[key] = (spark, df)
-    return _TABLE_CACHE[key][1]
+        cache[key] = (
+            _read_events(spark, path) if name == "events" else spark.read.parquet(path)
+        )
+    return cache[key]
 
 
 def _read_events(spark: SparkSession, path: str):
